@@ -54,8 +54,15 @@ def read_table(spark: SparkSession, path: str,
 
 
 def write_overwrite(df: DataFrame, path: str, fmt: str = DEFAULT_FORMAT,
-                    partition_by: tuple[str, ...] = ()) -> None:
+                    partition_by: tuple[str, ...] = (),
+                    dynamic: bool = False) -> None:
+    """Overwrite the table at ``path``.  ``dynamic=True`` replaces ONLY
+    the partitions present in ``df``; the mode is a writer option, never
+    session conf, so concurrent writers on other driver threads keep
+    their own mode."""
     w = df.write.format(fmt).mode("overwrite")
+    if dynamic:
+        w = w.option("partitionOverwriteMode", "dynamic")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(path)
@@ -129,9 +136,8 @@ class ZoneCatalog:
         present in ``df``, keeping other dates' history — the correct
         verb for date-partitioned ingest zones (a static overwrite
         would wipe every previous ingest_date)."""
-        with _dynamic_partition_overwrite(df.sparkSession):
-            write_overwrite(df, self.path(zone, table), self.fmt,
-                            partition_by)
+        write_overwrite(df, self.path(zone, table), self.fmt, partition_by,
+                        dynamic=True)
 
     def merge(self, df: DataFrame, zone: str, table: str,
               merge_keys: list[str],
@@ -171,21 +177,6 @@ def _keys_and_cond(df: DataFrame, merge_keys: list[str]):
         c = F.col(k).eqNullSafe(F.col(f"__k_{k}"))
         cond = c if cond is None else (cond & c)
     return keys, cond
-
-
-from contextlib import contextmanager  # noqa: E402
-
-
-@contextmanager
-def _dynamic_partition_overwrite(spark: SparkSession):
-    """Scope spark.sql.sources.partitionOverwriteMode=dynamic so an
-    overwrite replaces ONLY the partitions present in the written data."""
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def compact_table(spark: SparkSession, path: str, fmt: str = DEFAULT_FORMAT,
@@ -303,11 +294,8 @@ def incremental_rollup(delta: DataFrame, path: str, group_keys: list[str],
     # overwrite-with-read-self rule as upsert/compact_table).
     ).localCheckpoint(eager=True)
 
-    with _dynamic_partition_overwrite(spark):
-        # Dynamic mode replaces ONLY the partitions present in `merged`.
-        merged.write.format(fmt).mode("overwrite").partitionBy(
-            partition_key
-        ).save(path)
+    # Dynamic mode replaces ONLY the partitions present in `merged`.
+    write_overwrite(merged, path, fmt, (partition_key,), dynamic=True)
 
 
 def partials_union_combine(a: DataFrame, b: DataFrame, group_keys: list[str],
@@ -416,10 +404,7 @@ def _overwrite_touched_partitions(spark: SparkSession, path: str, fmt: str,
     # materialize the touched-partition list BEFORE the overwrite —
     # its plan reads the files the overwrite is about to delete
     touched_rows = touched.collect()
-    with _dynamic_partition_overwrite(spark):
-        dataset_touched.write.format(fmt).mode("overwrite").partitionBy(
-            *partition_by
-        ).save(path)
+    write_overwrite(dataset_touched, path, fmt, partition_by, dynamic=True)
     # Dynamic overwrite only rewrites partitions PRESENT in the
     # output: a touched partition that ended up EMPTY (its only row
     # moved away or was deleted) would keep its stale files.  Delete

@@ -11,16 +11,23 @@ Re-expresses the reference's three silver jobs
 - blind append → idempotent merge (operators/incremental.py)
 - swallowed exceptions (to_silver.py:137-140) → fail fast; the runner
   records an audit row per task instead (audit/audit_logger.py schema).
+- one table at a time → each DAG level's independent tasks and table
+  writes overlap on driver threads (:func:`concurrently`).
 """
 
 from __future__ import annotations
 
 import socket
+import threading
 import time
 import traceback
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
+from functools import partial
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -40,6 +47,29 @@ from vexere_lakehouse_pipeline_spark.operators.surrogate_keys import (
     max_existing_key,
 )
 from vexere_lakehouse_pipeline_spark.plans import gold
+
+T = TypeVar("T")
+
+
+def concurrently(spark: SparkSession, *fns: Callable[[], T]) -> list[T]:
+    """Run ``fns`` on driver threads; return their results in order.
+
+    Each thread inherits the caller's Spark local properties and tags
+    (job group, scheduler pool), so its jobs stay attributable to the
+    caller.  At most ``defaultParallelism`` threads run at once: a wider
+    pool only queues more jobs for the same task slots while their plans
+    and write buffers add to driver memory.  Every function runs to the
+    end; the first failure in argument order is then re-raised."""
+    if not fns:
+        return []
+    width = min(len(fns), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=max(width, 1)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn))
+                   for fn in fns]
+    for f in futures:
+        if f.exception() is not None:
+            raise f.exception()
+    return [f.result() for f in futures]
 
 
 def _with_bus_id(df: DataFrame, bus_ids: DataFrame, first_cols: list[str]) -> DataFrame:
@@ -218,9 +248,16 @@ def run_gold(silver: dict[str, DataFrame]) -> dict[str, DataFrame]:
 
 class PipelineRunner:
     """Minimal DAG runner with audit emission (kltn.dag.py +
-    audit/audit_logger.py semantics, minus Airflow).  Tasks run
-    sequentially (the reference's groups are sequential too); failures
-    PROPAGATE after the audit row is written — no silent except."""
+    audit/audit_logger.py semantics, minus Airflow).  Failures
+    PROPAGATE after the audit row is written — no silent except.
+
+    Tasks may run on several driver threads at once.
+    :func:`run_full_pipeline` runs the three silver groups side by side
+    (the reference runs them one after another, kltn.dag.py:116) on at
+    most ``defaultParallelism`` threads; a failing task lets its
+    siblings finish, then gold is skipped and the failure propagates.
+    The audit buffer and its flush share one lock, so every attempt row
+    is written exactly once and only one flush creates the audit table."""
 
     def __init__(self, spark: SparkSession, zones: ZoneCatalog,
                  dag_id: str = "vexere_pipeline"):
@@ -228,6 +265,7 @@ class PipelineRunner:
         self.zones = zones
         self.dag_id = dag_id
         self._audit_rows: list[tuple] = []
+        self._audit_lock = threading.Lock()
 
     def run_task(self, task_id: str, fn: Callable[[], None],
                  retries: int = 1, retry_delay_s: float = 0.0) -> None:
@@ -246,14 +284,15 @@ class PipelineRunner:
                 traceback.print_exc()
             end = time.time()
             now = datetime.now(timezone.utc).isoformat()
-            self._audit_rows.append(
-                (
-                    now, self.dag_id, task_id, state,
-                    datetime.fromtimestamp(start, timezone.utc).isoformat(),
-                    datetime.fromtimestamp(end, timezone.utc).isoformat(),
-                    round(end - start, 3), attempt, socket.gethostname(),
+            with self._audit_lock:
+                self._audit_rows.append(
+                    (
+                        now, self.dag_id, task_id, state,
+                        datetime.fromtimestamp(start, timezone.utc).isoformat(),
+                        datetime.fromtimestamp(end, timezone.utc).isoformat(),
+                        round(end - start, 3), attempt, socket.gethostname(),
+                    )
                 )
-            )
             if err is None:
                 return
             if attempt <= retries and retry_delay_s:
@@ -267,20 +306,24 @@ class PipelineRunner:
         raise err
 
     def flush_audit(self) -> None:
-        if not self._audit_rows:
-            return
-        df = self.spark.createDataFrame(self._audit_rows, AUDIT_SCHEMA)
-        path = self.zones.path("audit", "audit")
+        """Write the buffered audit rows.  The lock is held from taking
+        the rows to clearing them, so a row appended meanwhile waits for
+        the next flush, and a failed write keeps the rows buffered."""
         from vexere_lakehouse_pipeline_spark.operators.incremental import (
             read_table,
             write_overwrite,
         )
 
-        if read_table(self.spark, path, self.zones.fmt) is None:
-            write_overwrite(df, path, self.zones.fmt)
-        else:
-            df.write.format(self.zones.fmt).mode("append").save(path)
-        self._audit_rows = []
+        with self._audit_lock:
+            if not self._audit_rows:
+                return
+            df = self.spark.createDataFrame(self._audit_rows, AUDIT_SCHEMA)
+            path = self.zones.path("audit", "audit")
+            if read_table(self.spark, path, self.zones.fmt) is None:
+                write_overwrite(df, path, self.zones.fmt)
+            else:
+                df.write.format(self.zones.fmt).mode("append").save(path)
+            self._audit_rows = []
 
 
 def run_full_pipeline(spark: SparkSession, zones: ZoneCatalog,
@@ -288,20 +331,29 @@ def run_full_pipeline(spark: SparkSession, zones: ZoneCatalog,
                       raw_reviews: DataFrame, bus_ids: DataFrame,
                       ingest_date: str = "2025-05-01") -> dict[str, DataFrame]:
     """End-to-end: raw → bronze (parquet/delta zones, date-partitioned)
-    → silver (merge-append) → gold (overwrite).  Returns the gold DFs."""
+    → silver (merge-append) → gold (overwrite).  Returns the gold DFs.
+
+    Each level's independent work overlaps (:func:`concurrently`): the
+    four bronze writes, the three silver tasks (the reference runs them
+    one after another, kltn.dag.py:116) and the eight gold refreshes.
+    A failed silver task lets its siblings finish, then skips gold and
+    propagates."""
     runner = PipelineRunner(spark, zones)
 
     def to_bronze():
-        # Dynamic overwrite: re-running a day replaces THAT day's
-        # partition only; prior ingest dates stay (the reference's
-        # daily overwrite kept one day ever — SURVEY §2.1 S5 upgraded).
-        zones.overwrite_partitions(
-            raw_tickets.withColumn("ingest_date", F.lit(ingest_date)),
-            "bronze", "ticket", partition_by=("ingest_date",),
+        concurrently(
+            spark,
+            # Dynamic overwrite: re-running a day replaces THAT day's
+            # partition only; prior ingest dates stay (the reference's
+            # daily overwrite kept one day ever — SURVEY §2.1 S5 upgraded).
+            lambda: zones.overwrite_partitions(
+                raw_tickets.withColumn("ingest_date", F.lit(ingest_date)),
+                "bronze", "ticket", partition_by=("ingest_date",),
+            ),
+            lambda: zones.overwrite(raw_facilities, "bronze", "facility"),
+            lambda: zones.overwrite(raw_reviews, "bronze", "review"),
+            lambda: zones.overwrite(bus_ids, "silver", "bus_ids"),
         )
-        zones.overwrite(raw_facilities, "bronze", "facility")
-        zones.overwrite(raw_reviews, "bronze", "review")
-        zones.overwrite(bus_ids, "silver", "bus_ids")
 
     runner.run_task("to_bronze", to_bronze)
 
@@ -323,8 +375,6 @@ def run_full_pipeline(spark: SparkSession, zones: ZoneCatalog,
                         "Departure_Place", "Price"],
         )
 
-    runner.run_task("ticket_to_silver", ticket_silver)
-
     def facility_silver():
         out = facility_to_silver(
             zones.read(spark, "bronze", "facility"),
@@ -335,8 +385,6 @@ def run_full_pipeline(spark: SparkSession, zones: ZoneCatalog,
                     merge_keys=["Bus_Id", "Bus_Name", "Facility_Id"])
         zones.merge(out["facility_name"], "silver", "facility_name",
                     merge_keys=["Facility_Name"])
-
-    runner.run_task("facility_to_silver", facility_silver)
 
     def review_silver():
         vi_base = max_existing_key(
@@ -354,9 +402,27 @@ def run_full_pipeline(spark: SparkSession, zones: ZoneCatalog,
             zones.merge(out[name], "silver", name,
                         merge_keys=["Bus_Name", "Customer_Name", "Comment", "Date"])
 
-    runner.run_task("review_to_silver", review_silver)
+    try:
+        concurrently(
+            spark,
+            partial(runner.run_task, "ticket_to_silver", ticket_silver),
+            partial(runner.run_task, "facility_to_silver", facility_silver),
+            partial(runner.run_task, "review_to_silver", review_silver),
+        )
+    except Exception as err:
+        # a failed task flushed the audit before its siblings finished;
+        # their rows go out too before the failure propagates
+        try:
+            runner.flush_audit()
+        except Exception as flush_err:  # pragma: no cover - env-dependent
+            raise err from flush_err
+        raise
 
     gold_out: dict[str, DataFrame] = {}
+
+    def refresh(name: str, df: DataFrame) -> tuple[str, DataFrame]:
+        zones.overwrite(df, "gold", name)
+        return name, zones.read(spark, "gold", name)
 
     def gold_refresh():
         silver = {
@@ -364,9 +430,9 @@ def run_full_pipeline(spark: SparkSession, zones: ZoneCatalog,
             for name in ("ticket", "facility", "facility_name",
                          "bus_reviews_vi", "bus_reviews_en")
         }
-        for name, df in run_gold(silver).items():
-            zones.overwrite(df, "gold", name)
-            gold_out[name] = zones.read(spark, "gold", name)
+        gold_out.update(concurrently(
+            spark, *(partial(refresh, name, df)
+                     for name, df in run_gold(silver).items())))
 
     runner.run_task("update_charts", gold_refresh)
     runner.flush_audit()
