@@ -75,6 +75,14 @@ def test_merge_append_delta_branch(spark, delta_stub):
     F.expr(t.cond)  # Spark's parser accepts the generated condition
 
 
+def test_keyed_merge_append_delta_branch_keys_above_max(spark, delta_stub):
+    df = spark.createDataFrame([("d1", "a"), ("d2", "b")], "day string, v string")
+    incremental.merge_append(df, "/delta/t", ["day"], fmt="delta", key_col="id")
+    src = delta_stub.last.source
+    assert src.columns == ["id", "day", "v"]  # key first, as in the target
+    assert sorted(r.id for r in src.collect()) == [1, 2]  # above max id 0
+
+
 def test_upsert_delta_branch(spark, delta_stub):
     df = spark.createDataFrame([(1, "d1", "a")], "id int, day string, v string")
     incremental.upsert(df, "/delta/t2", ["id"], fmt="delta")

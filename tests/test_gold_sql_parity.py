@@ -8,7 +8,11 @@ import pytest
 
 from vexere_lakehouse_pipeline_spark.operators.incremental import ZoneCatalog
 from vexere_lakehouse_pipeline_spark.plans import gold_sql
-from vexere_lakehouse_pipeline_spark.plans.pipeline import run_full_pipeline, run_gold
+from vexere_lakehouse_pipeline_spark.plans.pipeline import (
+    facility_to_silver,
+    run_full_pipeline,
+    run_gold,
+)
 from vexere_lakehouse_pipeline_spark.sources import fixtures
 
 
@@ -43,6 +47,23 @@ def test_sql_matches_dataframe_mode(spark, silver, name):
     a = sorted(str(tuple(r)) for r in sql_df.collect())
     b = sorted(str(tuple(r)) for r in df_df.collect())
     assert a == b
+
+
+def test_cau8_grid_follows_facility_dim_in_both_modes(spark, silver):
+    """Seed 104's facility lists cover 18 of the 21 names: both modes
+    size the grid to the dim, with no phantom ids above it."""
+    fac = facility_to_silver(fixtures.raw_facilities(spark, seed=104),
+                             silver["bus_ids"])
+    narrow = dict(silver, **fac)
+    n_names = fac["facility_name"].count()
+    assert n_names < 21
+    gold_sql.register_silver_views(spark, narrow)
+    sql_rows = sorted(str(tuple(r)) for r in gold_sql.run_gold_sql(spark)["cau_8"].collect())
+    df_rows = run_gold(narrow)["cau_8"].collect()
+    assert sql_rows == sorted(str(tuple(r)) for r in df_rows)
+    n_ops = len({r.bus_name for r in df_rows})
+    assert len(df_rows) == n_ops * n_names
+    assert max(r.facility_id for r in df_rows) == n_names
 
 
 def test_catalog_register_views_sql_matches_dataframe(spark):

@@ -20,6 +20,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vexere_lakehouse_pipeline_spark.operators.surrogate_keys import (
+    assign_keys_distributed,
+    key_pinned,
+    max_existing_key,
+    pin_partition_counts,
+)
+
 try:  # pragma: no cover - delta not present in this environment
     from delta.tables import DeltaTable
 
@@ -70,19 +77,26 @@ def write_overwrite(df: DataFrame, path: str, fmt: str = DEFAULT_FORMAT,
 
 def merge_append(df: DataFrame, path: str, merge_keys: list[str],
                  fmt: str = DEFAULT_FORMAT,
-                 partition_by: tuple[str, ...] = ()) -> int:
+                 partition_by: tuple[str, ...] = (),
+                 key_col: str | None = None) -> int:
     """Idempotent append: insert only rows whose ``merge_keys`` are not
-    already present.  Returns the number of rows appended."""
+    already present.  Returns the number of rows appended.
+
+    ``key_col`` names a surrogate key the batch does not carry yet: the
+    novel rows — and only they — get keys ``max + 1 .. max + n`` above
+    the target's max key, so keys stay dense over appended rows and a
+    replayed row never burns one.  The key column comes first.  When no
+    row is new, nothing is written."""
     spark = df.sparkSession
     existing = read_table(spark, path, fmt)
-    if existing is None:
-        # single evaluation: count + write read the same materialized
-        # blocks (a nondeterministic source otherwise double-executes
-        # and can report a count differing from the written rows)
-        df = df.localCheckpoint(eager=True)
-        write_overwrite(df, path, fmt, partition_by)
-        return df.count()
-    if _HAVE_DELTA and fmt == "delta":  # stub-covered: tests/test_delta_wiring.py
+    if _HAVE_DELTA and fmt == "delta" and existing is not None:  # stub-covered: tests/test_delta_wiring.py
+        if key_col:
+            # MERGE filters replays itself, so the whole batch is keyed;
+            # replayed rows leave gaps in the key sequence here.
+            df = _keyed_first(
+                assign_keys_distributed(
+                    df, key_col, base=max_existing_key(existing, key_col)),
+                key_col)
         cond = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in merge_keys)
         (
             DeltaTable.forPath(spark, path)
@@ -92,23 +106,49 @@ def merge_append(df: DataFrame, path: str, merge_keys: list[str],
             .execute()
         )
         return -1  # delta does not report insert counts synchronously
-    # Null-safe key equality (<=>): rows with null key components must
-    # still match their replay twins, else every rerun re-appends them.
-    seen, cond = _keys_and_cond(existing, merge_keys)
-    # No broadcast hint: the existing-keys side grows with the table;
-    # AQE picks broadcast when (and only when) it actually fits.
-    # localCheckpoint: the anti-join executes ONCE — count() and the
-    # write both read the materialized blocks instead of re-running the
-    # scan+join (and a nondeterministic source can't diverge between
-    # the counted and written rows).
-    novel = df.join(seen, on=cond, how="left_anti").localCheckpoint(eager=True)
-    n = novel.count()
-    if n:
-        w = novel.write.format(fmt).mode("append")
+    if existing is not None:
+        # Null-safe key equality (<=>): rows with null key components
+        # must still match their replay twins, else every rerun
+        # re-appends them.  No broadcast hint: the existing-keys side
+        # grows with the table; AQE picks broadcast when (and only when)
+        # it actually fits.
+        df = anti_join_keys(df, existing, merge_keys)
+    # One pinned pass: the anti-join (or, for a new table, the batch)
+    # executes once, and its per-partition counts give both the
+    # appended-row count and the key offsets — the write reads the
+    # pinned blocks, so a nondeterministic source cannot diverge
+    # between the counted, keyed and written rows.
+    pinned, counts = pin_partition_counts(df)
+    n = sum(counts.values())
+    if existing is not None and not n:
+        return 0
+    if key_col:
+        out = _keyed_first(
+            key_pinned(pinned, counts, key_col,
+                       base=max_existing_key(existing, key_col)),
+            key_col)
+    else:
+        out = pinned.drop("_pid")
+    if existing is None:
+        write_overwrite(out, path, fmt, partition_by)
+    else:
+        w = out.write.format(fmt).mode("append")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.save(path)
     return n
+
+
+def anti_join_keys(df: DataFrame, existing: DataFrame,
+                   merge_keys: list[str]) -> DataFrame:
+    """Rows of ``df`` whose ``merge_keys`` are absent from ``existing``
+    (null-safe: a null key component matches a null)."""
+    seen, cond = _keys_and_cond(existing, merge_keys)
+    return df.join(seen, on=cond, how="left_anti")
+
+
+def _keyed_first(df: DataFrame, key_col: str) -> DataFrame:
+    return df.select(key_col, *[c for c in df.columns if c != key_col])
 
 
 class ZoneCatalog:
@@ -141,9 +181,11 @@ class ZoneCatalog:
 
     def merge(self, df: DataFrame, zone: str, table: str,
               merge_keys: list[str],
-              partition_by: tuple[str, ...] = ()) -> int:
+              partition_by: tuple[str, ...] = (),
+              key_col: str | None = None) -> int:
         return merge_append(
-            df, self.path(zone, table), merge_keys, self.fmt, partition_by
+            df, self.path(zone, table), merge_keys, self.fmt, partition_by,
+            key_col,
         )
 
 
@@ -167,7 +209,7 @@ def _escape_path_name(s: str) -> str:
 
 def _keys_and_cond(df: DataFrame, merge_keys: list[str]):
     """Distinct key frame (renamed __k_*) + null-safe equality condition
-    against it — shared by merge_append and upsert so the <=> semantics
+    against it — shared by anti_join_keys and upsert so the <=> semantics
     can't drift between them."""
     keys = df.select(
         *[F.col(k).alias(f"__k_{k}") for k in merge_keys]

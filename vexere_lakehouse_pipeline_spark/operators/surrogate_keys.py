@@ -18,12 +18,15 @@ replacements:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def assign_keys_distributed(df: DataFrame, key_col: str, base: int = 0) -> DataFrame:
-    """Unique sequential-ish long keys > ``base`` without a global shuffle."""
+def pin_partition_counts(df: DataFrame) -> tuple[DataFrame, dict[int, int]]:
+    """Pin ``df`` with a ``_pid`` column and count its rows per
+    partition: the driver-side state :func:`key_pinned` offsets from,
+    and (summed) the frame's row count, so a caller that keys a batch
+    needs no separate ``count()`` job."""
     # localCheckpoint pins the row->partition assignment: the counts
     # job and the keyed output otherwise re-evaluate the (possibly
     # nondeterministic) upstream twice, which could both double the
@@ -35,6 +38,15 @@ def assign_keys_distributed(df: DataFrame, key_col: str, base: int = 0) -> DataF
         r["_pid"]: r["cnt"]
         for r in with_pid.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
     }
+    return with_pid, counts
+
+
+def key_pinned(with_pid: DataFrame, counts: dict[int, int], key_col: str,
+               base: int = 0, order: list[Column] | None = None) -> DataFrame:
+    """Key a frame pinned by :func:`pin_partition_counts`: rows get
+    ``base + 1 .. base + n`` — partition p's rows follow those of every
+    lower partition, ordered within p by ``order`` (physical order by
+    default)."""
     offsets, acc = {}, base
     for pid in sorted(counts):
         offsets[pid] = acc
@@ -50,7 +62,9 @@ def assign_keys_distributed(df: DataFrame, key_col: str, base: int = 0) -> DataF
     offset_arr = F.array(
         *[F.lit(offsets.get(i, 0)) for i in range(max(offsets) + 1)]
     )
-    w = Window.partitionBy("_pid").orderBy(F.monotonically_increasing_id())
+    w = Window.partitionBy("_pid").orderBy(
+        *(order or [F.monotonically_increasing_id()])
+    )
     return (
         with_pid.withColumn("_local", F.row_number().over(w))
         .withColumn(
@@ -61,6 +75,11 @@ def assign_keys_distributed(df: DataFrame, key_col: str, base: int = 0) -> DataF
         )
         .drop("_pid", "_local")
     )
+
+
+def assign_keys_distributed(df: DataFrame, key_col: str, base: int = 0) -> DataFrame:
+    """Unique sequential-ish long keys > ``base`` without a global shuffle."""
+    return key_pinned(*pin_partition_counts(df), key_col, base)
 
 
 def assign_keys_range_ordered(df: DataFrame, key_col: str,
@@ -84,35 +103,9 @@ def assign_keys_range_ordered(df: DataFrame, key_col: str,
     arranged = (
         df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
     )
-    with_pid = arranged.withColumn(
-        "_pid", F.spark_partition_id()
-    ).localCheckpoint(eager=True)
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in with_pid.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets, acc = {}, base
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    if not offsets:
-        return with_pid.withColumn(key_col, F.lit(base).cast("long")).drop(
-            "_pid"
-        )
-    offset_arr = F.array(
-        *[F.lit(offsets.get(i, 0)) for i in range(max(offsets) + 1)]
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    return (
-        with_pid.withColumn("_local", F.row_number().over(w))
-        .withColumn(
-            key_col,
-            (
-                F.element_at(offset_arr, F.col("_pid") + 1) + F.col("_local")
-            ).cast("long"),
-        )
-        .drop("_pid", "_local")
-    )
+    with_pid, counts = pin_partition_counts(arranged)
+    return key_pinned(with_pid, counts, key_col, base,
+                      order=[F.col(c) for c in order_cols])
 
 
 def assign_keys_ordered(df: DataFrame, key_col: str, order_cols: list[str],

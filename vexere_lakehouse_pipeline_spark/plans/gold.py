@@ -164,20 +164,22 @@ def cau_7_hourly_coverage(ticket: DataFrame) -> DataFrame:
 
 
 def cau_8_facility_coverage(
-    facility: DataFrame, facility_name: DataFrame, n_facilities: int = 21
+    facility: DataFrame, facility_name: DataFrame
 ) -> DataFrame:
     """Operator × facility coverage grid with MIN-dedup of names
-    (to_gold.py:181-218)."""
-    spark = facility.sparkSession
+    (to_gold.py:181-218).  The grid is 1..|facility_name| wide (at least
+    1), sized inside the plan: the reference's literal 21 drops ids
+    above it and emits phantom ids below it when a crawl's facility
+    lists cover fewer names."""
     source = facility.filter(
         F.col("Bus_Name").isNotNull() & F.col("Facility_Id").isNotNull()
     ).select(
         F.col("Bus_Name").cast("string").alias("bus_name"),
         F.col("Facility_Id").cast("int").alias("facility_id"),
     )
-    grid_ids = spark.range(1).select(
-        F.explode(F.sequence(F.lit(1), F.lit(n_facilities))).alias("facility_id")
-    )
+    grid_ids = facility_name.agg(
+        F.greatest(F.count("*"), F.lit(1)).cast("int").alias("n")
+    ).select(F.explode(F.sequence(F.lit(1), F.col("n"))).alias("facility_id"))
     flags = source.distinct().withColumn("has_facility", F.lit(1))
     names_dedup = (
         facility_name.filter(F.col("Facility_Name").isNotNull())

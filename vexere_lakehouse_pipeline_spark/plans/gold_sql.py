@@ -4,7 +4,8 @@ The reference runs these as ``spark.sql`` over temp views
 (convert/to_gold.py:21-218).  The engine's canonical form is the
 DataFrame builders in plans/gold.py; this module preserves the SQL
 surface — same view names, same query texts (normalized only where the
-rebuild canonicalizes nondeterminism: sorted collect_set in cau_1) —
+rebuild canonicalizes nondeterminism: sorted collect_set in cau_1; and
+cau_8's grid is as wide as the facility_name dim, not a literal 21) —
 so SQL-first users keep their workflow.  ``test_gold_sql_parity``
 pins DataFrame-mode ≡ SQL-mode row-for-row.
 """
@@ -127,7 +128,10 @@ GOLD_SQL: dict[str, str] = {
         FROM facility
         WHERE bus_name IS NOT NULL AND facility_id IS NOT NULL
     ),
-    facilities AS (SELECT explode(sequence(1, 21)) AS facility_id),
+    facilities AS (
+        SELECT explode(sequence(1, n)) AS facility_id
+        FROM (SELECT CAST(GREATEST(COUNT(*), 1) AS INT) AS n FROM facility_name)
+    ),
     bus_names AS (SELECT DISTINCT bus_name FROM source),
     bus_facility_flag AS (
         SELECT DISTINCT bus_name, facility_id, 1 AS has_facility FROM source

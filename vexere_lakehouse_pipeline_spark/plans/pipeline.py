@@ -24,7 +24,7 @@ import traceback
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
-from functools import partial
+from functools import partial, reduce
 from typing import TypeVar
 
 from pyspark import inheritable_thread_target
@@ -35,7 +35,10 @@ from vexere_lakehouse_pipeline_spark.catalog import AUDIT_SCHEMA
 from vexere_lakehouse_pipeline_spark.functions.cleaning import (
     conform_ticket_columns,
 )
-from vexere_lakehouse_pipeline_spark.operators.incremental import ZoneCatalog
+from vexere_lakehouse_pipeline_spark.operators.incremental import (
+    ZoneCatalog,
+    anti_join_keys,
+)
 from vexere_lakehouse_pipeline_spark.operators.nlp import (
     fake_score_batch,
     language_column,
@@ -49,6 +52,9 @@ from vexere_lakehouse_pipeline_spark.operators.surrogate_keys import (
 from vexere_lakehouse_pipeline_spark.plans import gold
 
 T = TypeVar("T")
+
+# a review's identity in silver: the merge key of bus_reviews_vi/_en
+REVIEW_KEYS = ["Bus_Name", "Customer_Name", "Comment", "Date"]
 
 
 def concurrently(spark: SparkSession, *fns: Callable[[], T]) -> list[T]:
@@ -82,12 +88,12 @@ def _with_bus_id(df: DataFrame, bus_ids: DataFrame, first_cols: list[str]) -> Da
     return joined.select(*ordered)
 
 
-def ticket_to_silver(raw: DataFrame, bus_ids: DataFrame, base_key: int = 0) -> DataFrame:
+def ticket_to_silver(raw: DataFrame, bus_ids: DataFrame) -> DataFrame:
     """Bronze ticket rows → typed, conformed silver rows
-    (to_silver.py:110-134 semantics, UDF-free)."""
+    (to_silver.py:110-134 semantics, UDF-free).  ``Bus_Key`` is assigned
+    by the merge, to the rows it appends."""
     cleaned = conform_ticket_columns(raw).drop("Bus_Key")
-    keyed = assign_keys_distributed(cleaned, "Bus_Key", base=base_key)
-    return _with_bus_id(keyed, bus_ids, ["Bus_Key", "Bus_Id", "Bus_Name"])
+    return _with_bus_id(cleaned, bus_ids, ["Bus_Id", "Bus_Name"])
 
 
 def conform_facilities(raw: DataFrame) -> DataFrame:
@@ -193,10 +199,10 @@ def facility_to_silver(raw: DataFrame, bus_ids: DataFrame,
 
 
 def review_to_silver(raw: DataFrame, bus_ids: DataFrame,
-                     score_batch=fake_score_batch,
-                     base_key_vi: int = 0, base_key_en: int = 0) -> dict[str, DataFrame]:
+                     score_batch=fake_score_batch) -> dict[str, DataFrame]:
     """Reviews → language-routed, sentiment-scored silver tables
     (predict/sentiment_analysis.py + to_silver.py:171-205).
+    ``Review_Key`` is assigned by the merge, to the rows it appends.
 
     vi rows carry POS/NEG/NEU; en rows POS/NEG only (reference parity:
     3-class vi model, 2-class en model)."""
@@ -217,11 +223,9 @@ def review_to_silver(raw: DataFrame, bus_ids: DataFrame,
         F.round(F.col("s.pos"), 4).alias("POS"),
         F.round(F.col("s.neg"), 4).alias("NEG"),
     )
-    vi = assign_keys_distributed(vi, "Review_Key", base=base_key_vi)
-    en = assign_keys_distributed(en, "Review_Key", base=base_key_en)
     return {
-        "bus_reviews_vi": _with_bus_id(vi, bus_ids, ["Review_Key", "Bus_Id", "Bus_Name"]),
-        "bus_reviews_en": _with_bus_id(en, bus_ids, ["Review_Key", "Bus_Id", "Bus_Name"]),
+        "bus_reviews_vi": _with_bus_id(vi, bus_ids, ["Bus_Id", "Bus_Name"]),
+        "bus_reviews_en": _with_bus_id(en, bus_ids, ["Bus_Id", "Bus_Name"]),
     }
 
 
@@ -238,11 +242,7 @@ def run_gold(silver: dict[str, DataFrame]) -> dict[str, DataFrame]:
         "cau_5": gold.cau_5_review_volume(vi),
         "cau_6": gold.cau_6_satisfaction_10pt(vi, en),
         "cau_7": gold.cau_7_hourly_coverage(t),
-        # grid width follows the ACTUAL dim (hardcoding 21 would drop
-        # ids above it / emit phantom rows below it); the dim is tiny.
-        "cau_8": gold.cau_8_facility_coverage(
-            fac, fname, n_facilities=max(fname.count(), 1)
-        ),
+        "cau_8": gold.cau_8_facility_coverage(fac, fname),
     }
 
 
@@ -331,13 +331,20 @@ def run_full_pipeline(spark: SparkSession, zones: ZoneCatalog,
                       raw_reviews: DataFrame, bus_ids: DataFrame,
                       ingest_date: str = "2025-05-01") -> dict[str, DataFrame]:
     """End-to-end: raw → bronze (parquet/delta zones, date-partitioned)
-    → silver (merge-append) → gold (overwrite).  Returns the gold DFs.
+    → silver (merge-append) → gold (overwrite).  Returns the gold DFs,
+    read back with the schema they were written with.
 
     Each level's independent work overlaps (:func:`concurrently`): the
     four bronze writes, the three silver tasks (the reference runs them
     one after another, kltn.dag.py:116) and the eight gold refreshes.
     A failed silver task lets its siblings finish, then skips gold and
-    propagates."""
+    propagates.
+
+    Silver does only the run's new work.  The keyed merges assign
+    ``Bus_Key`` and ``Review_Key`` to the rows they append, dense above
+    the table's max key.  Reviews already in silver are neither
+    language-detected nor scored again; when none is new, the review
+    task writes nothing."""
     runner = PipelineRunner(spark, zones)
 
     def to_bronze():
@@ -357,28 +364,27 @@ def run_full_pipeline(spark: SparkSession, zones: ZoneCatalog,
 
     runner.run_task("to_bronze", to_bronze)
 
+    # the conformance dim, read once for the three silver tasks
+    silver_bus_ids = zones.read(spark, "silver", "bus_ids")
+
     def ticket_silver():
         # Prune to TODAY's partition: bronze retains all ingest dates,
         # and reprocessing the full history each run would grow O(history).
         bronze = zones.read(spark, "bronze", "ticket").filter(
             F.col("ingest_date") == ingest_date
         )
-        existing = zones.read(spark, "silver", "ticket")
-        base = max_existing_key(existing, "Bus_Key")
-        silver = ticket_to_silver(
-            bronze.drop("ingest_date"), zones.read(spark, "silver", "bus_ids"),
-            base_key=base,
-        )
         zones.merge(
-            silver, "silver", "ticket",
+            ticket_to_silver(bronze.drop("ingest_date"), silver_bus_ids),
+            "silver", "ticket",
             merge_keys=["Bus_Name", "Start_Date", "Route", "Departure_Time",
                         "Departure_Place", "Price"],
+            key_col="Bus_Key",
         )
 
     def facility_silver():
         out = facility_to_silver(
             zones.read(spark, "bronze", "facility"),
-            zones.read(spark, "silver", "bus_ids"),
+            silver_bus_ids,
             existing_names=zones.read(spark, "silver", "facility_name"),
         )
         zones.merge(out["facility"], "silver", "facility",
@@ -387,20 +393,22 @@ def run_full_pipeline(spark: SparkSession, zones: ZoneCatalog,
                     merge_keys=["Facility_Name"])
 
     def review_silver():
-        vi_base = max_existing_key(
-            zones.read(spark, "silver", "bus_reviews_vi"), "Review_Key"
-        )
-        en_base = max_existing_key(
-            zones.read(spark, "silver", "bus_reviews_en"), "Review_Key"
-        )
-        out = review_to_silver(
-            zones.read(spark, "bronze", "review"),
-            zones.read(spark, "silver", "bus_ids"),
-            base_key_vi=vi_base, base_key_en=en_base,
-        )
-        for name in ("bus_reviews_vi", "bus_reviews_en"):
+        reviews = zones.read(spark, "bronze", "review")
+        tables = ("bus_reviews_vi", "bus_reviews_en")
+        existing = [df for df in (zones.read(spark, "silver", name)
+                                  for name in tables) if df is not None]
+        if existing:
+            # score only reviews silver does not hold yet: language
+            # detection and the sentiment model are the per-row cost
+            seen = reduce(DataFrame.unionByName,
+                          (df.select(*REVIEW_KEYS) for df in existing))
+            reviews = anti_join_keys(reviews, seen, REVIEW_KEYS)
+            if len(existing) == len(tables) and reviews.isEmpty():
+                return
+        out = review_to_silver(reviews, silver_bus_ids)
+        for name in tables:
             zones.merge(out[name], "silver", name,
-                        merge_keys=["Bus_Name", "Customer_Name", "Comment", "Date"])
+                        merge_keys=REVIEW_KEYS, key_col="Review_Key")
 
     try:
         concurrently(
@@ -422,7 +430,9 @@ def run_full_pipeline(spark: SparkSession, zones: ZoneCatalog,
 
     def refresh(name: str, df: DataFrame) -> tuple[str, DataFrame]:
         zones.overwrite(df, "gold", name)
-        return name, zones.read(spark, "gold", name)
+        # the writer's schema is the table's: no schema-inference job
+        return name, spark.read.schema(df.schema).format(zones.fmt).load(
+            zones.path("gold", name))
 
     def gold_refresh():
         silver = {

@@ -44,6 +44,13 @@ _SCALE_DEFAULTS = {
     # lenient-ingest casts (messy raw strings -> typed silver) return null
     # instead of failing the job; the conform layer uses try_* explicitly.
     "spark.sql.ansi.enabled": "false",
+    # Whole-stage codegen cache: the default 100 entries is smaller than
+    # one daily DAG run's working set, about 330 generated classes (283
+    # on a cold run plus 52 new ones on the first warm run), and than a
+    # read_mix pass's 126, so every rerun evicted and recompiled all of
+    # them (Janino, then JIT).  A static conf: it takes effect only in a
+    # session this factory creates, not in one getOrCreate() reuses.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
