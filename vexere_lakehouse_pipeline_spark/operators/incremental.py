@@ -15,10 +15,15 @@ from date predicates.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
+import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from vexere_lakehouse_pipeline_spark.operators.surrogate_keys import (
     assign_keys_distributed,
@@ -37,24 +42,33 @@ except ImportError:
 DEFAULT_FORMAT = "delta" if _HAVE_DELTA else "parquet"
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """(Hadoop Path, its FileSystem) — file://, hdfs:// and s3a:// alike."""
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    return jvm_path, jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+
+
 def table_exists(spark: SparkSession, path: str) -> bool:
     """Public-API existence probe (the reference reaches into py4j
     internals, audit_logger.py:24 — S11)."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    jvm_path, fs = _hadoop_path(spark, path)
     return bool(fs.exists(jvm_path))
 
 
 def read_table(spark: SparkSession, path: str,
                fmt: str = DEFAULT_FORMAT,
-               merge_schema: bool = False) -> DataFrame | None:
+               merge_schema: bool = False,
+               schema: StructType | None = None) -> DataFrame | None:
     """``merge_schema=True`` reconciles files written under evolved
     schemas (columns added over time null-fill on old files) — the
     drift tolerance SURVEY §1.3 calls out as a real requirement
-    (the reference's dual-type Facilities column)."""
+    (the reference's dual-type Facilities column).  A given ``schema``
+    is used as the table's: parquet then runs no schema-inference job."""
     if not table_exists(spark, path):
         return None
     reader = spark.read.format(fmt)
+    if schema is not None:
+        reader = reader.schema(schema)
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     return reader.load(path)
@@ -78,7 +92,9 @@ def write_overwrite(df: DataFrame, path: str, fmt: str = DEFAULT_FORMAT,
 def merge_append(df: DataFrame, path: str, merge_keys: list[str],
                  fmt: str = DEFAULT_FORMAT,
                  partition_by: tuple[str, ...] = (),
-                 key_col: str | None = None) -> int:
+                 key_col: str | None = None,
+                 read: Callable[[SparkSession, str], DataFrame | None]
+                 | None = None) -> int:
     """Idempotent append: insert only rows whose ``merge_keys`` are not
     already present.  Returns the number of rows appended.
 
@@ -86,9 +102,10 @@ def merge_append(df: DataFrame, path: str, merge_keys: list[str],
     novel rows — and only they — get keys ``max + 1 .. max + n`` above
     the target's max key, so keys stay dense over appended rows and a
     replayed row never burns one.  The key column comes first.  When no
-    row is new, nothing is written."""
+    row is new, nothing is written.  ``read(spark, path)`` reads the
+    existing table (default: :func:`read_table` in ``fmt``)."""
     spark = df.sparkSession
-    existing = read_table(spark, path, fmt)
+    existing = read(spark, path) if read else read_table(spark, path, fmt)
     if _HAVE_DELTA and fmt == "delta" and existing is not None:  # stub-covered: tests/test_delta_wiring.py
         if key_col:
             # MERGE filters replays itself, so the whole batch is keyed;
@@ -154,21 +171,114 @@ def _keyed_first(df: DataFrame, key_col: str) -> DataFrame:
 class ZoneCatalog:
     """bronze/silver/gold/audit zone registry over a base directory —
     the rebuild's equivalent of the reference's MinIO buckets
-    (s3a://bronze/... etc.); works identically over s3a:// or file://."""
+    (s3a://bronze/... etc.); works identically over s3a:// or file://.
+
+    On parquet the catalog remembers each table's schema: the first
+    :meth:`read` of a table infers it (one Spark job over the file
+    footers) and later reads, :meth:`merge`'s included, pass it to
+    ``spark.read.schema``, so they start no job.  A write through the
+    catalog whose columns differ from the remembered ones drops the
+    entry; writers that bypass the catalog must keep a table's columns.
+    Delta reads take their schema from the log and are not memoized.
+
+    :meth:`overwrite_if_changed` skips a rebuild whose input files and
+    plan match those of the table's last write.  Its precondition: the
+    frame reads only zone tables, deterministically — in-memory data in
+    a plan that also reads files is not part of the fingerprint."""
 
     def __init__(self, base: str, fmt: str = DEFAULT_FORMAT):
         self.base = base.rstrip("/")
         self.fmt = fmt
+        # table path -> schema; the DAG's threads share it
+        self._schemas: dict[str, StructType] = {}
+        self._schemas_lock = threading.Lock()
 
     def path(self, zone: str, table: str) -> str:
         return os.path.join(self.base, zone, table)
 
     def read(self, spark: SparkSession, zone: str, table: str) -> DataFrame | None:
-        return read_table(spark, self.path(zone, table), self.fmt)
+        return self._read_path(spark, self.path(zone, table))
+
+    def _read_path(self, spark: SparkSession, path: str) -> DataFrame | None:
+        if self.fmt != "parquet":
+            return read_table(spark, path, self.fmt)
+        with self._schemas_lock:
+            schema = self._schemas.get(path)
+        df = read_table(spark, path, self.fmt, schema=schema)
+        with self._schemas_lock:
+            if df is None:
+                self._schemas.pop(path, None)
+            elif schema is None:
+                self._schemas.setdefault(path, df.schema)
+        return df
+
+    def _wrote(self, path: str, schema: StructType,
+               partition_by: tuple[str, ...] = ()) -> None:
+        """Drop the memo entry of ``path`` if a write of ``schema``
+        changed the table's columns.  Partition columns read back last,
+        with an inferred type, so only their names are compared; other
+        columns compare by name and type, ignoring nullability."""
+        written = [(f.name, f.dataType.simpleString()) for f in schema
+                   if f.name not in partition_by] + [(p, None) for p in partition_by]
+        with self._schemas_lock:
+            memo = self._schemas.get(path)
+            if memo is not None and written != [
+                    (f.name, None if f.name in partition_by
+                     else f.dataType.simpleString()) for f in memo]:
+                del self._schemas[path]
 
     def overwrite(self, df: DataFrame, zone: str, table: str,
                   partition_by: tuple[str, ...] = ()) -> None:
-        write_overwrite(df, self.path(zone, table), self.fmt, partition_by)
+        path = self.path(zone, table)
+        write_overwrite(df, path, self.fmt, partition_by)
+        self._wrote(path, df.schema, partition_by)
+
+    def overwrite_if_changed(self, df: DataFrame, zone: str, table: str) -> bool:
+        """Overwrite ``zone/table`` with ``df`` unless the table already
+        holds this plan's result over these input files; returns whether
+        it wrote.
+
+        The fingerprint is a sha256 over ``df``'s sorted input files and
+        its analyzed plan with expression ids removed, so a new or
+        rewritten input file, or a change to the code that builds the
+        frame, forces a rebuild.  It is kept in an ``_inputs`` marker
+        in the table directory (file listings skip ``_`` names),
+        removed before the write and written only after the commit: a
+        failed write leaves no marker and the next call rebuilds.  A
+        frame with no input files (in-memory data, a Python data
+        source) is always written.  Precondition: ``df`` reads only
+        zone tables (see the class docstring)."""
+        files = sorted(df.inputFiles())
+        if not files:
+            self.overwrite(df, zone, table)
+            return True
+        spark = df.sparkSession
+        # treeString(verbose, addSuffix, maxFields, printOperatorId,
+        # printOutputColumns): toString would cut lists longer than
+        # spark.sql.debug.maxToStringFields
+        plan = df._jdf.queryExecution().analyzed().treeString(  # noqa: SLF001
+            True, False, 2**31 - 1, False, False)
+        digest = hashlib.sha256(
+            "\n".join([*files, re.sub(r"#\d+", "", plan)]).encode()
+        ).hexdigest()
+        marker, fs = _hadoop_path(spark, self.path(zone, table) + "/_inputs")
+        if fs.exists(marker):
+            stream = fs.open(marker)
+            try:
+                stored = spark._jvm.org.apache.commons.io.IOUtils.toString(  # noqa: SLF001
+                    stream, "UTF-8")
+            finally:
+                stream.close()
+            if stored == digest:
+                return False
+            fs.delete(marker, False)
+        self.overwrite(df, zone, table)
+        out = fs.create(marker, True)
+        try:
+            out.write(bytearray(digest.encode()))
+        finally:
+            out.close()
+        return True
 
     def overwrite_partitions(self, df: DataFrame, zone: str, table: str,
                              partition_by: tuple[str, ...]) -> None:
@@ -176,17 +286,27 @@ class ZoneCatalog:
         present in ``df``, keeping other dates' history — the correct
         verb for date-partitioned ingest zones (a static overwrite
         would wipe every previous ingest_date)."""
-        write_overwrite(df, self.path(zone, table), self.fmt, partition_by,
-                        dynamic=True)
+        path = self.path(zone, table)
+        write_overwrite(df, path, self.fmt, partition_by, dynamic=True)
+        self._wrote(path, df.schema, partition_by)
 
     def merge(self, df: DataFrame, zone: str, table: str,
               merge_keys: list[str],
               partition_by: tuple[str, ...] = (),
               key_col: str | None = None) -> int:
-        return merge_append(
-            df, self.path(zone, table), merge_keys, self.fmt, partition_by,
-            key_col,
+        path = self.path(zone, table)
+        n = merge_append(
+            df, path, merge_keys, self.fmt, partition_by, key_col,
+            read=self._read_path,
         )
+        if n:
+            written = df.schema
+            if key_col:
+                written = StructType(
+                    [StructField(key_col, LongType())]
+                    + [f for f in df.schema if f.name != key_col])
+            self._wrote(path, written, partition_by)
+        return n
 
 
 # The character set Spark/Hive percent-escape in partition DIRECTORY

@@ -310,7 +310,7 @@ class PipelineRunner:
         the rows to clearing them, so a row appended meanwhile waits for
         the next flush, and a failed write keeps the rows buffered."""
         from vexere_lakehouse_pipeline_spark.operators.incremental import (
-            read_table,
+            table_exists,
             write_overwrite,
         )
 
@@ -319,7 +319,7 @@ class PipelineRunner:
                 return
             df = self.spark.createDataFrame(self._audit_rows, AUDIT_SCHEMA)
             path = self.zones.path("audit", "audit")
-            if read_table(self.spark, path, self.zones.fmt) is None:
+            if not table_exists(self.spark, path):
                 write_overwrite(df, path, self.zones.fmt)
             else:
                 df.write.format(self.zones.fmt).mode("append").save(path)
@@ -331,8 +331,9 @@ def run_full_pipeline(spark: SparkSession, zones: ZoneCatalog,
                       raw_reviews: DataFrame, bus_ids: DataFrame,
                       ingest_date: str = "2025-05-01") -> dict[str, DataFrame]:
     """End-to-end: raw → bronze (parquet/delta zones, date-partitioned)
-    → silver (merge-append) → gold (overwrite).  Returns the gold DFs,
-    read back with the schema they were written with.
+    → silver (merge-append) → gold (rebuilt when its inputs changed).
+    Returns the gold DFs, read back with the schema they were written
+    with.
 
     Each level's independent work overlaps (:func:`concurrently`): the
     four bronze writes, the three silver tasks (the reference runs them
@@ -344,7 +345,15 @@ def run_full_pipeline(spark: SparkSession, zones: ZoneCatalog,
     ``Bus_Key`` and ``Review_Key`` to the rows they append, dense above
     the table's max key.  Reviews already in silver are neither
     language-detected nor scored again; when none is new, the review
-    task writes nothing."""
+    task writes nothing.
+
+    Gold rebuilds only what changed: each of the eight tables is
+    written through :meth:`ZoneCatalog.overwrite_if_changed`, keyed on
+    its silver input files and its plan, so a day that appends no
+    reviews or facilities leaves cau_5, cau_6 and cau_8 as they are,
+    and a refresh that failed is redone by the next run.  The verb's
+    precondition holds: every gold frame reads only silver zone tables
+    (cau_7's hour grid is a literal range, part of its plan)."""
     runner = PipelineRunner(spark, zones)
 
     def to_bronze():
@@ -429,7 +438,7 @@ def run_full_pipeline(spark: SparkSession, zones: ZoneCatalog,
     gold_out: dict[str, DataFrame] = {}
 
     def refresh(name: str, df: DataFrame) -> tuple[str, DataFrame]:
-        zones.overwrite(df, "gold", name)
+        zones.overwrite_if_changed(df, "gold", name)
         # the writer's schema is the table's: no schema-inference job
         return name, spark.read.schema(df.schema).format(zones.fmt).load(
             zones.path("gold", name))
